@@ -398,14 +398,16 @@ def main() -> int:
     # round-over-round comparison. The stdout line stays the contract;
     # BENCH_SELF.json is the identical payload on disk so the next round's
     # PERF can always reconstruct `prev` from the repo.
+    # Serialize before opening the file, so a payload that cannot be
+    # serialized neither leaves a partial file nor stops the stdout line.
     try:
+        text = json.dumps(payload, indent=1) + "\n"
         self_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json"
         )
         with open(self_path, "w") as fh:
-            json.dump(payload, fh, indent=1)
-            fh.write("\n")
-    except OSError as e:  # archival must never sink the bench
+            fh.write(text)
+    except Exception as e:  # archival must never sink the bench
         print(f"# BENCH_SELF.json write failed: {e}", file=sys.stderr)
     print(json.dumps(payload))
     return 0

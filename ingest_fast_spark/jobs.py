@@ -9,7 +9,9 @@ Topology replacement (SURVEY.md §3.1):
     ``input_file_name()`` — Spark's task scheduler replaces the cluster
     module, and adding files scales the scan, not the process count;
   * the FASTTermEvent double-read (reference lib/ingest.js:58,197) is
-    gone: the Event file is read once and branches twice;
+    gone: each run parses every file once into persisted ``filter_triples``
+    records, and both sinks (the Event file feeds both) read that one
+    frame, which the run releases before it returns;
   * Mongo collections become parquet tables written with
     ``mode('overwrite')`` (S8 drop-and-recreate semantics,
     reference lib/ingest.js:63-66);
@@ -22,14 +24,17 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.fast_pipeline import (
-    AGENT_TYPES,
     FILE_TYPES,
+    VIAF_ONLY_TYPES,
     build_fast_table_tagged,
     build_viaf_updates_tagged,
+    filter_triples,
+    topical_records,
     type_from_filename,
 )
 from .session import apply_runtime_confs
@@ -55,13 +60,23 @@ def validate_source_dir(data_dir: str, require_all: bool = True) -> list[str]:
     return present
 
 
+def _tagged_records(lines: DataFrame) -> DataFrame:
+    """Raw NT lines (batch or stream) → ``filter_triples`` records that
+    keep the per-row ``branch`` tag (S1/S2 + the type-from-filename rule,
+    reference lib/ingest.js:201-210)."""
+    tagged = lines.withColumn("branch", type_from_filename(F.input_file_name()))
+    return filter_triples(parse_nt_lines(tagged, keep=("branch",)), keep=("branch",))
+
+
+# run_ingest builds every plan through scan_tagged_triples,
+# build_fast_table_tagged and build_viaf_updates_tagged: perfbench/run.py
+# wraps these three names to trace plan construction.
 def scan_tagged_triples(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """ONE scan over every source file → parsed triples + ``branch`` tag
-    (S1/S2 + the type-from-filename rule, reference lib/ingest.js:201-210)."""
-    lines = spark.read.text(paths).withColumn(
-        "branch", type_from_filename(F.input_file_name())
-    )
-    return parse_nt_lines(lines, keep=("branch",))
+    """ONE scan over every source file → tagged ``filter_triples`` records,
+    persisted so that both sinks share one parse. The caller owns the
+    cache and must ``unpersist`` it."""
+    records = _tagged_records(spark.read.text(paths))
+    return records.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def run_ingest(
@@ -80,32 +95,36 @@ def run_ingest(
     """
     apply_runtime_confs(spark)
     paths = validate_source_dir(data_dir, require_all=require_all_files)
-    tagged = scan_tagged_triples(spark, paths)
-
-    # Topical branch (§3.2): everything except Corporate/Personal.
-    non_agent = tagged.filter(
-        ~F.col("branch").isin([t for t in AGENT_TYPES if t != "Event"])
-    )
-    fast_obs = Observation("fast_metrics")
-    fast_docs = build_fast_table_tagged(non_agent).observe(
-        fast_obs,
-        F.count(F.lit(1)).alias("n_fast_docs"),
-        # DISTINCT aggregates are disallowed in observed metrics; the HLL
-        # sketch is exact at this cardinality (8 type names).
-        F.approx_count_distinct("type").alias("n_types"),
-    )
-    fast_docs.write.mode("overwrite").parquet(os.path.join(out_dir, "fast"))
-    metrics = dict(fast_obs.get)
-
-    # Agent/VIAF branch (§3.3).
-    if viaf is not None:
-        agent = tagged.filter(F.col("branch").isin(list(AGENT_TYPES)))
-        viaf_obs = Observation("viaf_metrics")
-        updated = build_viaf_updates_tagged(agent, viaf).observe(
-            viaf_obs, F.count(F.lit(1)).alias("n_viaf_docs")
+    if viaf is None:
+        # Without the viaf branch the Corporate/Personal files feed no
+        # sink; leave them out of the scan rather than parse and cache them.
+        paths = [
+            p for p in paths
+            if FILE_TYPES[os.path.basename(p)[: -len(".nt")]] not in VIAF_ONLY_TYPES
+        ]
+    records = scan_tagged_triples(spark, paths)
+    try:
+        fast_obs = Observation("fast_metrics")
+        fast_docs = build_fast_table_tagged(records).observe(
+            fast_obs,
+            F.count(F.lit(1)).alias("n_fast_docs"),
+            # DISTINCT aggregates are disallowed in observed metrics; the
+            # HLL sketch is exact at this cardinality (8 type names).
+            F.approx_count_distinct("type").alias("n_types"),
         )
-        updated.write.mode("overwrite").parquet(os.path.join(out_dir, "viaf"))
-        metrics.update(viaf_obs.get)
+        fast_docs.write.mode("overwrite").parquet(os.path.join(out_dir, "fast"))
+        metrics = dict(fast_obs.get)
+
+        # Agent/VIAF branch (§3.3).
+        if viaf is not None:
+            viaf_obs = Observation("viaf_metrics")
+            updated = build_viaf_updates_tagged(records, viaf).observe(
+                viaf_obs, F.count(F.lit(1)).alias("n_viaf_docs")
+            )
+            updated.write.mode("overwrite").parquet(os.path.join(out_dir, "viaf"))
+            metrics.update(viaf_obs.get)
+    finally:
+        records.unpersist()
     return metrics
 
 
@@ -131,39 +150,49 @@ def run_ingest_streaming(
     last run (tests/test_jobs.py pins this). Without it every AvailableNow
     run re-reads the whole directory — correct (the upsert converges to
     the same table) but O(corpus) per restart instead of O(delta).
+
+    Each micro-batch persists its records (read by the doc aggregate and
+    the broadcast label side) and the merged table (which must be
+    materialized before the write replaces the files it reads), and
+    releases both before it returns.
     """
     apply_runtime_confs(spark)
     lines = (
         spark.readStream.format("text")
         .option("pathGlobFilter", glob)
         .load(data_dir)
-        .withColumn("branch", type_from_filename(F.input_file_name()))
     )
-    tagged = parse_nt_lines(lines, keep=("branch",))
-    non_agent = tagged.filter(
-        ~F.col("branch").isin([t for t in AGENT_TYPES if t != "Event"])
-    )
+    topical = topical_records(_tagged_records(lines))
     target = os.path.join(out_dir, "fast")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        sess = batch_df.sparkSession
-        new_docs = build_fast_table_tagged(batch_df)
+        records = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            existing = sess.read.parquet(target)
-        except Exception:
-            existing = None
-        if existing is not None:
-            merged = existing.join(
-                new_docs.select("_id"), "_id", "left_anti"
-            ).unionByName(new_docs)
-        else:
-            merged = new_docs
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target)
+            if not records.take(1):
+                return
+            sess = records.sparkSession
+            new_docs = build_fast_table_tagged(records)
+            try:
+                existing = sess.read.parquet(target)
+            except Exception:
+                existing = None
+            if existing is not None:
+                merged = existing.join(
+                    new_docs.select("_id"), "_id", "left_anti"
+                ).unionByName(new_docs)
+            else:
+                merged = new_docs
+            merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                merged.count()
+                merged.write.mode("overwrite").parquet(target)
+            finally:
+                merged.unpersist()
+        finally:
+            records.unpersist()
 
     writer = (
-        non_agent.writeStream.foreachBatch(merge_batch)
+        topical.writeStream.foreachBatch(merge_batch)
         .outputMode("append")
         .trigger(availableNow=True)
     )

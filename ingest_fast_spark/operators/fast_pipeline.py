@@ -3,11 +3,11 @@
 This is the reference's entire dataflow (reference lib/ingest.js:194-319)
 re-expressed as DataFrame transformations:
 
-    triples ──filter_triples──▶ parsed ──┬─ aggregate_fast ──▶ fast docs
-                                         └─ sameas_index  ──▶ URI→labels
-    fast docs ⨝ sameas index (broadcast) ──▶ enriched docs
+    triples ──filter_triples──▶ records ('fast' | 'sameAsLabel' rows)
+    'fast' sameAs URIs ⨝ 'sameAsLabel' rows (broadcast) ──enrich_rows──▶ hit rows
+    'fast' rows + hit rows ──aggregate_fast──▶ enriched fast docs
     enriched docs across files ──merge_fast──▶ final `fast` table
-    agent parsed ⨝ viaf (disjunctive keys) ──▶ updated `viaf` table
+    agent records ⨝ viaf (disjunctive keys) ──▶ updated `viaf` table
 
 Deterministic divergences from the reference (SURVEY.md §7.3):
   * prefLabel is MAX over candidates instead of last-write-in-stream-order
@@ -23,8 +23,8 @@ Deterministic divergences from the reference (SURVEY.md §7.3):
 Scale notes (100 TB): every step is a shuffle-on-key hash aggregate or a
 broadcast join — no driver-side state, no per-row Python. The reference's
 ">1 GB per process" in-heap maps (reference lib/ingest.js:3,102-103) become
-spillable ObjectHashAggregates; the sameAs label index (small relative to
-the triple corpus) is broadcast, so enrichment adds no shuffle of the big
+spillable ObjectHashAggregates; the sameAsLabel rows (small relative to
+the triple corpus) are broadcast, so enrichment adds no shuffle of the big
 side.
 """
 
@@ -59,6 +59,8 @@ FILE_TYPES = {
     "FASTTopical": "Topical",
 }
 AGENT_TYPES = ("Corporate", "Event", "Personal")
+# The Agent types whose files feed only the viaf branch; Event feeds both.
+VIAF_ONLY_TYPES = ("Corporate", "Personal")
 
 
 def type_from_filename(path: Column) -> Column:
@@ -91,14 +93,32 @@ def filter_triples(triples: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     bad_nan = s.contains("/fast/NaN") | o.contains("/fast/NaN")      # P3
     is_label_pred = p.isin(PRED_PREFLABEL, PRED_ALTLABEL, PRED_RDFS_LABEL)  # P4
 
-    literal = nt_literal(o)
-    label_ok = F.length(literal) >= 2                                # P6
-    lit_or_null = F.when(label_ok, literal)
-
     fast_branch = is_fast & ~bad_nan
     sameas_label_branch = (~is_fast) & (p == PRED_RDFS_LABEL)
 
-    parsed = triples.select(
+    # The literal and its normalized form are each computed once, in a
+    # projection of their own, and only on rows that use them. Inlined
+    # into every CASE branch below, they would make the stage's generated
+    # method ~23 KB of bytecode, over HotSpot's 8000-byte limit for JIT
+    # compilation, and the parse would run interpreted. Catalyst keeps the
+    # projections apart because the consumer references them repeatedly.
+    literal = F.col("_literal")
+    label_ok = F.length(literal) >= 2                                # P6
+    lit_or_null = F.when(label_ok, literal)
+    cols = ["subject", "predicate", "object", *keep]
+    with_literal = triples.select(
+        *cols, F.when(is_label_pred, nt_literal(o)).alias("_literal")
+    )
+    with_norm = with_literal.select(
+        *cols,
+        "_literal",
+        F.when(                                                      # F4+F5
+            (fast_branch & is_label_pred & label_ok) | sameas_label_branch,
+            normalize_and_singularize(literal),
+        ).alias("_normalized"),
+    )
+
+    parsed = with_norm.select(
         F.when(fast_branch, F.lit("fast"))
         .when(sameas_label_branch, F.lit("sameAsLabel"))
         .alias("rec_type"),
@@ -114,12 +134,7 @@ def filter_triples(triples: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
         F.when(
             fast_branch & (p == PRED_SAMEAS) & o.contains("viaf.org"), o
         ).alias("sameAsViaf"),
-        F.when(
-            fast_branch & is_label_pred & label_ok,
-            normalize_and_singularize(literal),                      # F4+F5
-        )
-        .when(sameas_label_branch, normalize_and_singularize(literal))
-        .alias("normalized"),
+        F.col("_normalized").alias("normalized"),
         F.when(sameas_label_branch, s).alias("subject"),
         *[F.col(k) for k in keep],
     )
@@ -240,77 +255,44 @@ def aggregate_fast(
     )
 
 
-def sameas_index(parsed: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
-    """A7 — URI → labels index from 'sameAsLabel' records
-    (reference lib/ingest.js:257-260 builds this as ``allSameAs``)."""
-    return (
-        parsed.filter(F.col("rec_type") == "sameAsLabel")
-        .groupBy(*extra_keys, "subject")
-        .agg(
-            _sorted_set(F.col("label")).alias("sa_labels"),
-            _sorted_set(F.col("normalized")).alias("sa_normalized"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
-# J1 — sameAs enrichment join (reference lib/ingest.js:267-289)
+# A7 + J1 — sameAs enrichment (reference lib/ingest.js:257-260,267-289)
 # ---------------------------------------------------------------------------
 
-def enrich_with_sameas(
-    fast_docs: DataFrame,
-    sameas: DataFrame,
-    extra_keys: tuple[str, ...] = (),
-) -> DataFrame:
-    """Append sameAs labels into altLabel/normalized.
+def enrich_rows(records: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
+    """Add one 'fast' hit row per sameAs label of a doc, ahead of
+    ``aggregate_fast``, which folds the hits into the doc's altLabel/
+    normalized sets.
 
-    Explode the doc's LC+VIAF URIs, probe the (broadcast) label index, and
-    re-aggregate — a set-oriented broadcast hash join replacing the
-    reference's per-record probe of its in-heap ``allSameAs`` map. Only
-    full URIs match the index (the reference probes the map with the URIs
-    it collected; bare-id segments never hit, reference lib/ingest.js:269,279).
-    With ``extra_keys`` the index is probed per source file (the
-    reference's ``allSameAs`` is file-local state).
+    Each 'fast' sameAs URI probes the (broadcast) 'sameAsLabel' rows —
+    the reference's ``allSameAs`` map (reference lib/ingest.js:257-260) —
+    and a match yields a row carrying that subject's label/normalized
+    values: a set-oriented broadcast hash join replacing the reference's
+    per-record probe of its in-heap map. Only full URIs can match (the
+    reference probes the map with the URIs it collected; bare-id segments
+    never hit, reference lib/ingest.js:269,279). With ``extra_keys`` the
+    labels are matched per source file (the reference's ``allSameAs`` is
+    file-local state).
     """
     keys = list(extra_keys)
-    uris = F.array_union("sameAsViaf", "sameAsLc")
-    exploded = fast_docs.select(
-        *keys, "_id", F.explode_outer(uris).alias("uri")
-    ).filter(F.col("uri").contains("/"))  # full URIs only, skip bare segments
+    labels = records.filter(F.col("rec_type") == "sameAsLabel").select(
+        F.col("subject").alias("uri"), *keys, "label", "normalized"
+    )
+    # A sameAs row sets sameAsLc and/or sameAsViaf, both to its object URI.
     hits = (
-        exploded.join(
-            F.broadcast(sameas.withColumnRenamed("subject", "uri")),
-            ["uri", *keys],
-            "inner",
-        )
-        .groupBy(*keys, "_id")
-        .agg(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("sa_labels")))).alias("hit_labels"),
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("sa_normalized")))).alias("hit_normalized"),
+        records.filter(F.col("rec_type") == "fast")
+        .select("id", *keys, F.coalesce("sameAsLc", "sameAsViaf").alias("uri"))
+        .filter(F.col("uri").contains("/"))
+        .join(F.broadcast(labels), ["uri", *keys], "inner")
+        .select(
+            F.lit("fast").alias("rec_type"),
+            "id",
+            *keys,
+            F.col("label").alias("altLabel"),
+            "normalized",
         )
     )
-    joined = fast_docs.join(F.broadcast(hits), ["_id", *keys], "left")
-    return joined.select(
-        *keys,
-        "_id",
-        "fast",
-        "type",
-        "prefLabel",
-        F.array_sort(
-            F.array_union(
-                "altLabel",
-                F.coalesce("hit_labels", F.array().cast("array<string>")),
-            )
-        ).alias("altLabel"),
-        "sameAsLc",
-        "sameAsViaf",
-        F.array_sort(
-            F.array_union(
-                "normalized",
-                F.coalesce("hit_normalized", F.array().cast("array<string>")),
-            )
-        ).alias("normalized"),
-    )
+    return records.unionByName(hits, allowMissingColumns=True)
 
 
 # ---------------------------------------------------------------------------
@@ -425,27 +407,33 @@ def update_viaf(viaf: DataFrame, matches: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _tagged_union(
-    triples_by_type: dict[str, DataFrame], types: tuple[str, ...] | None = None
-) -> DataFrame | None:
-    """Union all per-type triple DataFrames with a ``branch`` tag column —
-    the single-scan replacement for the reference's one-OS-process-per-file
-    topology (reference lib/ingest.js:58,68-69). ``types`` filters which
-    branches participate."""
+    triples_by_type: dict[str, DataFrame], types: tuple[str, ...]
+) -> DataFrame:
+    """Union the per-type triple DataFrames of ``types`` with a ``branch``
+    tag column — the single-scan replacement for the reference's
+    one-OS-process-per-file topology (reference lib/ingest.js:58,68-69)."""
     out = None
     for type_name, triples in triples_by_type.items():
-        if types is not None and type_name not in types:
+        if type_name not in types:
             continue
         t = triples.withColumn("branch", F.lit(type_name))
         out = t if out is None else out.unionByName(t)
     return out
 
 
+def topical_records(records: DataFrame) -> DataFrame:
+    """The rows of the topical branch (§3.2): every file but Corporate/
+    Personal, which feed only the viaf branch. Event feeds both."""
+    return records.filter(~F.col("branch").isin(list(VIAF_ONLY_TYPES)))
+
+
 def build_fast_table(triples_by_type: dict[str, DataFrame]) -> DataFrame:
     """The complete topical pipeline (§3.2), FUSED across source files:
     tag each file's triples with a ``branch`` column, then run ONE
-    parse-filter → ONE (branch, id) aggregate → ONE broadcast enrichment
-    join → (Event: skip-viaf filter, replacing the FASTTermEvent
-    double-read, reference lib/ingest.js:58,298-302) → cross-file merge.
+    parse-filter → ONE broadcast sameAs-label join at row level → ONE
+    (branch, id) aggregate → (Event: skip-viaf filter, replacing the
+    FASTTermEvent double-read, reference lib/ingest.js:58,298-302) →
+    cross-file merge.
 
     Per-file semantics are preserved because ``branch`` rides in every
     grouping/join key; the fusion turns 4×(agg+join) jobs into one shuffle
@@ -457,34 +445,24 @@ def build_fast_table(triples_by_type: dict[str, DataFrame]) -> DataFrame:
     terms (reference lib/ingest.js:11,298-302): Corporate/Personal feed the
     viaf branch, not this table.
     """
-    non_agent = tuple(
-        t for t in triples_by_type if t not in AGENT_TYPES or t == "Event"
-    )
-    return build_fast_table_tagged(_tagged_union(triples_by_type, non_agent))
+    topical = tuple(t for t in triples_by_type if t not in VIAF_ONLY_TYPES)
+    tagged = _tagged_union(triples_by_type, topical)
+    return build_fast_table_tagged(filter_triples(tagged, keep=("branch",)))
 
 
-def build_fast_table_tagged(tagged: DataFrame) -> DataFrame:
-    """build_fast_table over ONE pre-tagged triples DataFrame (column
-    ``branch`` = authority type) — the single-scan entry used by the job
-    runner, where the tag comes from ``input_file_name()``. Corporate/
-    Personal rows must already be excluded (they feed only the viaf
-    branch); Event rows get the skip-viaf filter here."""
-    # parsed feeds three consumers (doc aggregate, label index, enrichment
-    # probe); persist so the parse+normalize expressions run once — the
-    # spillable analogue of the reference's materialized maps.
-    from pyspark import StorageLevel
+def build_fast_table_tagged(records: DataFrame) -> DataFrame:
+    """build_fast_table over ONE DataFrame of ``filter_triples`` records
+    that keep the ``branch`` column (= authority type) — the entry used by
+    the job runner, which parses every file once and feeds both sinks from
+    the same records. Only the topical branches are read
+    (``topical_records``); Event rows get the skip-viaf filter here.
 
-    parsed = filter_triples(tagged, keep=("branch",)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    docs = aggregate_fast(parsed, F.col("branch"), extra_keys=("branch",))
-    enriched = enrich_with_sameas(
-        docs, sameas_index(parsed, extra_keys=("branch",)), extra_keys=("branch",)
-    )
-    enriched = enriched.filter(
-        ~((F.col("branch") == "Event") & (F.size("sameAsViaf") > 0))
-    )
-    return merge_fast(filter_bad_docs(enriched).drop("branch"))
+    Enrichment (``enrich_rows``) happens at row level, before the one
+    (branch, id) aggregate, so it adds no second aggregate or shuffle."""
+    records = enrich_rows(topical_records(records), extra_keys=("branch",))
+    docs = aggregate_fast(records, F.col("branch"), extra_keys=("branch",))
+    docs = docs.filter(~((F.col("branch") == "Event") & (F.size("sameAsViaf") > 0)))
+    return merge_fast(filter_bad_docs(docs).drop("branch"))
 
 
 def build_viaf_updates(
@@ -493,15 +471,15 @@ def build_viaf_updates(
     """The Agent/VIAF branch over Corporate/Event/Personal files
     (reference lib/ingest.js:212-232): one fused parse → derive otherId →
     disjunctive lookup join → set-oriented array append. (otherId links
-    are file-independent, so no branch tag is needed here.)"""
-    return build_viaf_updates_tagged(
-        _tagged_union(triples_by_type, AGENT_TYPES), viaf
-    )
+    are file-independent; the branch tag only selects the Agent files.)"""
+    tagged = _tagged_union(triples_by_type, AGENT_TYPES)
+    return build_viaf_updates_tagged(filter_triples(tagged, keep=("branch",)), viaf)
 
 
-def build_viaf_updates_tagged(agent_triples: DataFrame, viaf: DataFrame) -> DataFrame:
-    """build_viaf_updates over one pre-filtered DataFrame of Agent-file
-    triples (Corporate/Event/Personal)."""
-    links = derive_other_id(filter_triples(agent_triples))
-    matches = viaf_lookup_join(links, viaf)
+def build_viaf_updates_tagged(records: DataFrame, viaf: DataFrame) -> DataFrame:
+    """build_viaf_updates over one DataFrame of ``filter_triples`` records
+    that keep the ``branch`` column; only the Agent files
+    (Corporate/Event/Personal) are read."""
+    agent = records.filter(F.col("branch").isin(list(AGENT_TYPES)))
+    matches = viaf_lookup_join(derive_other_id(agent), viaf)
     return update_viaf(viaf, matches)

@@ -340,13 +340,9 @@ def fast_aggregate_docs(spark, sf_dir):
     """,
 )
 def fast_enrich_sameas(spark, sf_dir):
-    """A7 + J1: sameAs label index + broadcast enrichment join."""
+    """A7 + J1: broadcast sameAs-label join, folded into the aggregate."""
     parsed = fp.filter_triples(parse_nt_lines(_lines_df(spark, TOPICAL_LINES)))
-    return _join_arrays(
-        fp.enrich_with_sameas(
-            fp.aggregate_fast(parsed, "Topical"), fp.sameas_index(parsed)
-        )
-    )
+    return _join_arrays(fp.aggregate_fast(fp.enrich_rows(parsed), "Topical"))
 
 
 def _sql_branch(name: str, lines, type_name: str) -> str:

@@ -71,6 +71,37 @@ def test_run_ingest_matches_pipeline_queries(spark, nt_dir):
         assert metrics["n_fast_docs"] == written_fast.count()
         assert metrics["n_viaf_docs"] == written_viaf.count()
         assert metrics["n_types"] == 3  # Topical, Geographic, Event
+
+        # Without viaf the job scans only the files the fast table reads.
+        fast_only = jobs.run_ingest(spark, nt_dir, os.path.join(out_dir, "fast_only"))
+        written = spark.read.parquet(os.path.join(out_dir, "fast_only", "fast"))
+        assert _freeze(written.collect()) == _freeze(expected_fast.collect())
+        assert fast_only == {k: metrics[k] for k in ("n_fast_docs", "n_types")}
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_jobs_release_what_they_persist(spark, nt_dir):
+    """run_ingest and every run_ingest_streaming micro-batch unpersist the
+    frames they cache. Earlier tests in the session may still hold
+    persisted RDDs (localCheckpoint blocks wait for GC), so the check is
+    that no RDD persisted by the job outlives it."""
+    out_dir = tempfile.mkdtemp(prefix="fast_release_")
+    try:
+        viaf = spark.createDataFrame(
+            VIAF_ROWS, "_id string, viaf string, lcId string, fast array<bigint>"
+        )
+        before = _persisted_rdd_ids(spark)
+        jobs.run_ingest(spark, nt_dir, os.path.join(out_dir, "batch"), viaf=viaf)
+        assert _persisted_rdd_ids(spark) - before == set()
+
+        q = jobs.run_ingest_streaming(spark, nt_dir, os.path.join(out_dir, "stream"))
+        q.awaitTermination()
+        assert _persisted_rdd_ids(spark) - before == set()
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -61,6 +61,28 @@ def test_hot_path_in_codegen(spark, sf_dir):
     assert "*(1) HashAggregate" in plan and "*(1) Project" in plan, plan
 
 
+def test_fast_parse_methods_fit_the_jit_limit(spark, sf_dir):
+    # HotSpot does not JIT-compile a method over 8000 bytes of bytecode
+    # (unless the JVM runs with -XX:-DontCompileHugeMethods), so a
+    # whole-stage codegen method that big runs interpreted. The FAST
+    # parse reaches ~23 KB if its literal/normalize expressions are
+    # inlined into every CASE branch or its line regex into pushed-down
+    # filters.
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    try:
+        for name in ("fast_parse_triples", "fast_aggregate_docs"):
+            plan = QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan()
+            subtrees = debug.codegenStringSeq(plan)
+            assert subtrees.size() > 0, name
+            for i in range(subtrees.size()):
+                size = subtrees.apply(i)._3().maxMethodCodeSize()
+                assert size < 8000, f"{name}: {size}-byte generated method"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
 def test_cross_join_is_broadcast_nlj(spark, sf_dir):
     # The explicit dim×dim cartesian must be a broadcast NLJ, never a
     # shuffled CartesianProduct.

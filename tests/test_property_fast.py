@@ -46,7 +46,7 @@ def _nt(s, p, o):
 
 
 def py_reference(triples):
-    """Pure-Python twin of aggregate_fast + sameas_index + enrich (the
+    """Pure-Python twin of enrich_rows + aggregate_fast (the
     deterministic divergences documented in fast_pipeline.py)."""
     docs, sameas = {}, {}
     for s, p, o in triples:
@@ -110,9 +110,7 @@ def test_aggregation_matches_python_reference(spark, triples):
     lines = [_nt(*t) for t in triples]
     df = spark.createDataFrame([(l,) for l in lines], "value string").repartition(1)
     parsed = fp.filter_triples(parse_nt_lines(df))
-    result = fp.enrich_with_sameas(
-        fp.aggregate_fast(parsed, "Topical"), fp.sameas_index(parsed)
-    ).collect()
+    result = fp.aggregate_fast(fp.enrich_rows(parsed), "Topical").collect()
     got = {
         r["_id"]: {
             "prefLabel": r["prefLabel"],

@@ -19,6 +19,9 @@ SHUFFLE_BUDGET = {
     # reference pipeline: one agg shuffle + one merge shuffle
     "fast_aggregate_docs": 2,
     "fast_parse_triples": 0,  # map-only parse
+    # the (branch, id) doc aggregate + the cross-file _id merge; the
+    # sameAs enrichment is a broadcast join before the aggregate
+    "fast_table_end_to_end": 2,
     # relational core
     "q1_pricing_summary": 1,  # the group-by; dims broadcast
     "q5_region_revenue": 3,
