@@ -12,6 +12,10 @@ Topology replacement (SURVEY.md §3.1):
     gone: each run parses every file once into persisted ``filter_triples``
     records, and both sinks (the Event file feeds both) read that one
     frame, which the run releases before it returns;
+  * the two sinks run side by side, as the reference's per-file processes
+    did: the viaf sink writes from a second driver thread while the fast
+    sink writes from the calling one, so its stages fill the cores the
+    fast sink leaves idle;
   * Mongo collections become parquet tables written with
     ``mode('overwrite')`` (S8 drop-and-recreate semantics,
     reference lib/ingest.js:63-66);
@@ -24,7 +28,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark import StorageLevel
+from pyspark import InheritableThread, StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,7 +107,24 @@ def run_ingest(
             if FILE_TYPES[os.path.basename(p)[: -len(".nt")]] not in VIAF_ONLY_TYPES
         ]
     records = scan_tagged_triples(spark, paths)
+    viaf_sink, viaf_errors = None, []
     try:
+        # Agent/VIAF branch (§3.3), written beside the fast sink.
+        if viaf is not None:
+            viaf_obs = Observation("viaf_metrics")
+            updated = build_viaf_updates_tagged(records, viaf).observe(
+                viaf_obs, F.count(F.lit(1)).alias("n_viaf_docs")
+            )
+
+            def write_viaf() -> None:
+                try:
+                    updated.write.mode("overwrite").parquet(os.path.join(out_dir, "viaf"))
+                except BaseException as e:
+                    viaf_errors.append(e)
+
+            viaf_sink = InheritableThread(target=write_viaf, name="viaf-sink")
+            viaf_sink.start()
+
         fast_obs = Observation("fast_metrics")
         fast_docs = build_fast_table_tagged(records).observe(
             fast_obs,
@@ -114,17 +135,16 @@ def run_ingest(
         )
         fast_docs.write.mode("overwrite").parquet(os.path.join(out_dir, "fast"))
         metrics = dict(fast_obs.get)
-
-        # Agent/VIAF branch (§3.3).
-        if viaf is not None:
-            viaf_obs = Observation("viaf_metrics")
-            updated = build_viaf_updates_tagged(records, viaf).observe(
-                viaf_obs, F.count(F.lit(1)).alias("n_viaf_docs")
-            )
-            updated.write.mode("overwrite").parquet(os.path.join(out_dir, "viaf"))
-            metrics.update(viaf_obs.get)
     finally:
-        records.unpersist()
+        try:
+            if viaf_sink is not None:
+                viaf_sink.join()
+                if viaf_errors:
+                    raise viaf_errors[0]
+        finally:
+            records.unpersist()
+    if viaf_sink is not None:
+        metrics.update(viaf_obs.get)
     return metrics
 
 

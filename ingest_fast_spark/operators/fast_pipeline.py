@@ -5,9 +5,10 @@ re-expressed as DataFrame transformations:
 
     triples ──filter_triples──▶ records ('fast' | 'sameAsLabel' rows)
     'fast' sameAs URIs ⨝ 'sameAsLabel' rows (broadcast) ──enrich_rows──▶ hit rows
-    'fast' rows + hit rows ──aggregate_fast──▶ enriched fast docs
-    enriched docs across files ──merge_fast──▶ final `fast` table
-    agent records ⨝ viaf (disjunctive keys) ──▶ updated `viaf` table
+    'fast' rows + hit rows ──repartition(id)──▶ one hash exchange, then
+      ──aggregate_fast──▶ enriched fast docs per (branch, id)
+      ──merge_fast──▶ final `fast` table (same partitioning, no exchange)
+    agent links ⨝ viaf's (viaf, lcId) keys ∪ viaf ──groupBy(_id)──▶ updated `viaf`
 
 Deterministic divergences from the reference (SURVEY.md §7.3):
   * prefLabel is MAX over candidates instead of last-write-in-stream-order
@@ -20,12 +21,12 @@ Deterministic divergences from the reference (SURVEY.md §7.3):
     (reference lib/ingest.js:174-183) — same converged end state, no
     read-modify-write race.
 
-Scale notes (100 TB): every step is a shuffle-on-key hash aggregate or a
-broadcast join — no driver-side state, no per-row Python. The reference's
-">1 GB per process" in-heap maps (reference lib/ingest.js:3,102-103) become
-spillable ObjectHashAggregates; the sameAsLabel rows (small relative to
-the triple corpus) are broadcast, so enrichment adds no shuffle of the big
-side.
+Scale notes (100 TB): every step is a shuffle-on-key hash aggregate or
+join, or a broadcast join — no driver-side state, no per-row Python. The
+reference's ">1 GB per process" in-heap maps (reference
+lib/ingest.js:3,102-103) become spillable ObjectHashAggregates; the
+sameAsLabel rows (small relative to the triple corpus) are broadcast, so
+enrichment adds no shuffle of the big side.
 """
 
 from __future__ import annotations
@@ -312,6 +313,8 @@ def merge_fast(docs: DataFrame) -> DataFrame:
         tiebreak, so the DuckDB oracle can compute the identical rule;
       * ``prefLabel`` — MAX-coalesce across records (reference :143);
       * arrays — element-wise distinct union (reference :144-155).
+    In ``build_fast_table_tagged`` this aggregate shares the doc
+    aggregate's ``id`` exchange: ``_id`` is an alias of ``id``.
     """
     weight = (
         F.length("type")
@@ -367,38 +370,32 @@ def derive_other_id(parsed: DataFrame) -> DataFrame:
     )
 
 
-def viaf_lookup_join(fast_links: DataFrame, viaf: DataFrame) -> DataFrame:
-    """J2 — disjunctive-key lookup as a UNION of two equi-joins.
+def append_viaf_links(viaf: DataFrame, links: DataFrame) -> DataFrame:
+    """J2+J3 — append each matched FAST id to its VIAF doc's ``fast``
+    array (membership-checked, reference lib/ingest.js:108-128), as one
+    set-oriented merge instead of per-row lookups and point updates.
 
-    ``viaf == otherId OR lcId == otherId`` written as one OR-join would
-    force a nested-loop; two hash joins + dedup keeps both probes
-    broadcast/shuffle-hash-joinable at any scale
-    (reference lib/ingest.js:108-113).
+    The disjunctive key ``viaf == otherId OR lcId == otherId`` becomes one
+    equi-join against viaf's exploded ``(viaf, lcId)`` keys; viaf is
+    corpus-sized at scale, so it gets no broadcast hint. The matches and
+    the viaf rows then meet in one ``groupBy(_id)``, which assumes viaf's
+    ``_id`` is unique (it is the reference's Mongo key): rows sharing an
+    ``_id`` would be merged into one.
     """
-    by_viaf = fast_links.join(viaf, fast_links.otherId == viaf.viaf, "inner")
-    by_lc = fast_links.join(viaf, fast_links.otherId == viaf.lcId, "inner")
-    return by_viaf.unionByName(by_lc).select("_id", "fast_id").dropDuplicates(
-        ["_id", "fast_id"]
+    keys = viaf.select(
+        "_id", F.explode(F.array_distinct(F.array("viaf", "lcId"))).alias("otherId")
     )
-
-
-def update_viaf(viaf: DataFrame, matches: DataFrame) -> DataFrame:
-    """J3 — append new FAST ids to each matched VIAF doc's ``fast`` array
-    (membership-checked, reference lib/ingest.js:114-127), as one
-    set-oriented merge instead of per-row point updates."""
-    new_ids = matches.groupBy("_id").agg(
-        F.array_sort(F.collect_set("fast_id")).alias("_new_fast")
-    )
-    return viaf.join(new_ids, "_id", "left").select(
-        "_id",
-        "viaf",
-        "lcId",
-        F.array_sort(
-            F.array_union(
-                F.coalesce(F.col("fast"), F.array().cast("array<bigint>")),
-                F.coalesce(F.col("_new_fast"), F.array().cast("array<bigint>")),
-            )
-        ).alias("fast"),
+    matches = links.join(keys, "otherId").select("_id", "fast_id")
+    fast = F.concat(F.flatten(F.collect_list("fast")), F.collect_list("fast_id"))
+    return (
+        viaf.select("_id", "viaf", "lcId", "fast")
+        .unionByName(matches, allowMissingColumns=True)
+        .groupBy("_id")
+        .agg(
+            F.max("viaf").alias("viaf"),
+            F.max("lcId").alias("lcId"),
+            F.array_sort(F.array_distinct(fast)).alias("fast"),
+        )
     )
 
 
@@ -458,8 +455,10 @@ def build_fast_table_tagged(records: DataFrame) -> DataFrame:
     (``topical_records``); Event rows get the skip-viaf filter here.
 
     Enrichment (``enrich_rows``) happens at row level, before the one
-    (branch, id) aggregate, so it adds no second aggregate or shuffle."""
+    (branch, id) aggregate. The records are hash-partitioned by ``id``
+    once, which serves both that aggregate and ``merge_fast``'s."""
     records = enrich_rows(topical_records(records), extra_keys=("branch",))
+    records = records.repartition("id")
     docs = aggregate_fast(records, F.col("branch"), extra_keys=("branch",))
     docs = docs.filter(~((F.col("branch") == "Event") & (F.size("sameAsViaf") > 0)))
     return merge_fast(filter_bad_docs(docs).drop("branch"))
@@ -481,5 +480,4 @@ def build_viaf_updates_tagged(records: DataFrame, viaf: DataFrame) -> DataFrame:
     that keep the ``branch`` column; only the Agent files
     (Corporate/Event/Personal) are read."""
     agent = records.filter(F.col("branch").isin(list(AGENT_TYPES)))
-    matches = viaf_lookup_join(derive_other_id(agent), viaf)
-    return update_viaf(viaf, matches)
+    return append_viaf_links(viaf, derive_other_id(agent))

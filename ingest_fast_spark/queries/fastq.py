@@ -424,7 +424,9 @@ def _viaf_values() -> str:
 def fast_viaf_update(spark, sf_dir):
     """J2+J3 (§3.3): Agent-branch VIAF enrichment — disjunctive-key lookup
     join + set-oriented array append."""
+    # One partition, as in _lines_df: 4 rows need no defaultParallelism tasks.
     viaf = spark.createDataFrame(
-        VIAF_ROWS, "_id string, viaf string, lcId string, fast array<bigint>"
+        spark.sparkContext.parallelize(VIAF_ROWS, 1),
+        "_id string, viaf string, lcId string, fast array<bigint>",
     )
     return _join_arrays(fp.build_viaf_updates(_triples_by_type(spark), viaf), ["fast"])

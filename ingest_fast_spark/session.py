@@ -10,6 +10,7 @@ UTC session time so results are timezone-stable across clusters).
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -77,20 +78,21 @@ RUNTIME_CONFS: dict[str, str] = {
 INITIAL_PARTITION_FACTOR = 8
 
 
-# Sessions already configured by apply_runtime_confs (id-keyed; the engine
-# holds its sessions for the process lifetime). The function is called
-# defensively from every events/stream loader — ~12 ms of py4j conf.set
-# traffic per call that only needs to happen once per session (r10,
-# guide §4 driver-side cost).
-_CONFIGURED_SESSIONS: set[int] = set()
+# Sessions already configured by apply_runtime_confs. The function is
+# called defensively from every events/stream loader and every run_ingest
+# — ~12 ms of py4j conf.set traffic per call that only needs to happen once
+# per session (r10, guide §4 driver-side cost). Held weakly, by object
+# rather than by id(): a new session at a dead one's address must still
+# get the confs.
+_CONFIGURED_SESSIONS: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime confs to an externally created session
     (idempotent; no-op after the first call for a given session)."""
-    if id(spark) in _CONFIGURED_SESSIONS:
+    if spark in _CONFIGURED_SESSIONS:
         return spark
-    _CONFIGURED_SESSIONS.add(id(spark))
+    _CONFIGURED_SESSIONS.add(spark)
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)

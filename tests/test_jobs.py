@@ -106,6 +106,27 @@ def test_jobs_release_what_they_persist(spark, nt_dir):
         shutil.rmtree(out_dir, ignore_errors=True)
 
 
+def test_viaf_sink_failure_is_raised_and_released(spark, nt_dir):
+    """The viaf sink writes from its own thread; an error it hits at
+    execution reaches run_ingest's caller, and the records are still
+    released."""
+    from pyspark.sql import functions as F
+
+    out_dir = tempfile.mkdtemp(prefix="fast_viaf_fail_")
+    try:
+        viaf = spark.createDataFrame(
+            VIAF_ROWS, "_id string, viaf string, lcId string, fast array<bigint>"
+        )
+        boom = F.expr("if(viaf IS NULL, viaf, raise_error('viaf sink boom'))")
+        viaf = viaf.withColumn("viaf", boom)
+        before = _persisted_rdd_ids(spark)
+        with pytest.raises(Exception, match="viaf sink boom"):
+            jobs.run_ingest(spark, nt_dir, out_dir, viaf=viaf)
+        assert _persisted_rdd_ids(spark) - before == set()
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
 def test_validate_source_dir(spark, nt_dir):
     with pytest.raises(FileNotFoundError):
         jobs.validate_source_dir(nt_dir, require_all=True)  # only 4 of 8 files

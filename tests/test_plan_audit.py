@@ -67,12 +67,17 @@ def test_fast_parse_methods_fit_the_jit_limit(spark, sf_dir):
     # whole-stage codegen method that big runs interpreted. The FAST
     # parse reaches ~23 KB if its literal/normalize expressions are
     # inlined into every CASE branch or its line regex into pushed-down
-    # filters.
+    # filters; the doc, merge and viaf aggregates are checked alongside.
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     debug = spark._jvm.org.apache.spark.sql.execution.debug.package
     try:
-        for name in ("fast_parse_triples", "fast_aggregate_docs"):
+        for name in (
+            "fast_parse_triples",
+            "fast_aggregate_docs",
+            "fast_table_end_to_end",
+            "fast_viaf_update",
+        ):
             plan = QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan()
             subtrees = debug.codegenStringSeq(plan)
             assert subtrees.size() > 0, name

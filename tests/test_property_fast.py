@@ -3,7 +3,7 @@ the Spark FAST aggregation pipeline must equal an independent pure-Python
 re-implementation of the deterministic semantics (MAX-coalesce prefLabel,
 sorted-distinct arrays, URI+segment pairs, sameAs enrichment)."""
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from ingest_fast_spark.functions.scalars import normalize_and_singularize_py
@@ -122,3 +122,53 @@ def test_aggregation_matches_python_reference(spark, triples):
         for r in result
     }
     assert got == py_reference(triples)
+
+
+# --- J2+J3: the viaf update against a pure-Python left join ----------------
+
+keys = st.sampled_from(["1", "2", "3", "4"])
+viaf_tables = st.lists(
+    st.tuples(
+        keys,
+        st.one_of(st.none(), keys),
+        st.one_of(st.none(), st.lists(st.integers(1, 6), max_size=3)),
+    ),
+    max_size=5,
+).map(lambda rows: [(f"v{i}", v, lc, fast) for i, (v, lc, fast) in enumerate(rows)])
+links = st.lists(st.tuples(st.integers(1, 6), keys), max_size=8)
+
+
+def py_viaf_update(viaf_rows, link_rows):
+    """Each viaf row keeps its fields; ``fast`` becomes the sorted union of
+    its own ids and every linked id whose otherId equals its viaf or lcId."""
+    out = set()
+    for _id, v, lc, fast in viaf_rows:
+        new = {fid for fid, other in link_rows if other in (v, lc)}
+        out.add((_id, v, lc, tuple(sorted(set(fast or ()) | new))))
+    return out
+
+
+@settings(
+    max_examples=4, deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(viaf_tables, links)
+# unique _ids; a NULL fast array; a row matched by both viaf and lcId; an
+# unmatched row
+@example(
+    [("v0", "1", "2", [5]), ("v1", "3", None, None), ("v2", "4", "4", [])],
+    [(1, "1"), (2, "2"), (1, "2"), (6, "3")],
+)
+def test_viaf_update_matches_python_left_join(spark, viaf_rows, link_rows):
+    viaf = spark.createDataFrame(
+        spark.sparkContext.parallelize(viaf_rows, 1),
+        "_id string, viaf string, lcId string, fast array<bigint>",
+    )
+    link_df = spark.createDataFrame(
+        spark.sparkContext.parallelize(link_rows, 1), "fast_id bigint, otherId string"
+    )
+    got = {
+        (r["_id"], r["viaf"], r["lcId"], tuple(r["fast"]))
+        for r in fp.append_viaf_links(viaf, link_df).collect()
+    }
+    assert got == py_viaf_update(viaf_rows, link_rows)

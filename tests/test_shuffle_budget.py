@@ -19,9 +19,15 @@ SHUFFLE_BUDGET = {
     # reference pipeline: one agg shuffle + one merge shuffle
     "fast_aggregate_docs": 2,
     "fast_parse_triples": 0,  # map-only parse
-    # the (branch, id) doc aggregate + the cross-file _id merge; the
-    # sameAs enrichment is a broadcast join before the aggregate
-    "fast_table_end_to_end": 2,
+    # one repartition by id, shared by the (branch, id) doc aggregate and
+    # the cross-file _id merge (_id aliases id); the sameAs enrichment is
+    # a broadcast join before it
+    "fast_table_end_to_end": 1,
+    # one links ⨝ viaf-keys join on otherId (2: the RDD-backed fixture has
+    # no size estimate, so the static plan is the at-scale shuffle join,
+    # as it should be: viaf gets no broadcast hint) + the groupBy(_id)
+    # over viaf rows and matches (1)
+    "fast_viaf_update": 3,
     # relational core
     "q1_pricing_summary": 1,  # the group-by; dims broadcast
     "q5_region_revenue": 3,
