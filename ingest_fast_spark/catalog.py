@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import apply_runtime_confs
+from .session import apply_runtime_confs, plan_cache
 
 TABLES = (
     "region",
@@ -32,12 +32,12 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Parquet FOOTER SCHEMA cache, keyed by (absolute path, mtime). Schema
+# Parquet FOOTER SCHEMA cache: absolute path -> (stamp, schema). Schema
 # inference costs a measured ~80-100 ms of driver time PER spark.read.parquet
 # call (footer fetch + merge) — a pure fixed cost the bench pays once per
 # table per query per repeat (~190 queries x ~2 tables). The schema is file
 # METADATA pinned by the dataset contract (FIXTURES.md §B), not data: every
-# query still scans the parquet bytes in full, and the mtime key invalidates
+# query still scans the parquet bytes in full, and the stamp check rebuilds
 # the entry the moment a file is rewritten. At cluster scale the same trick
 # is what table catalogs (metastore/Iceberg manifests) do for you — guide §6.
 _SCHEMA_CACHE: dict = {}
@@ -55,67 +55,77 @@ def _path_stamp(path: str):
     return (st.st_mtime_ns, st.st_size)
 
 
+def _stamped(cache: dict, key, path: str, build):
+    """``cache[key]``'s value if it was built from ``path`` as it is now,
+    else ``build()`` stored under ``key`` with the current stamp. One entry
+    per key: a rewrite replaces the stale entry instead of adding one."""
+    stamp = _path_stamp(path)
+    hit = cache.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = build()
+    cache[key] = (stamp, value)
+    return value
+
+
 def parquet_schema(spark: SparkSession, path: str):
     """The parquet footer schema as Spark would infer it (under the session's
-    current confs), cached per (path, mtime)."""
-    key = (os.path.abspath(path), _path_stamp(path))
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = sch
-    return sch
+    current confs), cached per path until the file changes."""
+    path = os.path.abspath(path)
+    return _stamped(_SCHEMA_CACHE, path, path, lambda: spark.read.parquet(path).schema)
 
 
-# DataFrame PLAN cache, keyed (session id, path, stamp) — r10's sibling of
-# the schema cache one level up: a DataFrame is an immutable logical plan,
-# so handing every caller the same scan object is semantically identical to
-# re-building it (the bytes are still scanned at every action; the mtime
-# stamp invalidates on rewrite). What it saves is the ~12-38 ms of driver
-# work per ``spark.read.schema(...).parquet(...)`` call — a fixed cost paid
-# ~1.5x per query per bench repeat across 191 headliners (guide §4: the
-# Python boundary is also a driver-side cost). id(session) keying is safe
-# here because the engine holds its sessions for the process lifetime.
-_DF_CACHE: dict = {}
+# DataFrame PLAN cache (``session.plan_cache``), one entry per (kind, path)
+# — r10's sibling of the schema cache one level up: a DataFrame is an
+# immutable logical plan, so handing every caller the same scan object is
+# semantically identical to re-building it (the bytes are still scanned at
+# every action; the stamp check rebuilds on rewrite). What it saves is the
+# ~12-38 ms of driver work per ``spark.read.schema(...).parquet(...)`` call
+# — a fixed cost paid ~1.5x per query per bench repeat across 191
+# headliners (guide §4: the Python boundary is also a driver-side cost).
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` with schema + plan-object caching (same
     result; skips per-call schema inference and reader construction)."""
-    key = (id(spark), os.path.abspath(path), _path_stamp(path))
-    df = _DF_CACHE.get(key)
-    if df is None:
-        df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
-        _DF_CACHE[key] = df
-    return df
+    path = os.path.abspath(path)
+    return _stamped(
+        plan_cache(spark),
+        ("parquet", path),
+        path,
+        lambda: spark.read.schema(parquet_schema(spark, path)).parquet(path),
+    )
+
+
+def _normalized_events(spark: SparkSession, path: str) -> DataFrame:
+    from pyspark.sql.types import LongType
+
+    apply_runtime_confs(spark)  # needs nanosAsLong on driver-made sessions
+    df = read_parquet(spark, path)
+    if isinstance(df.schema["ts"].dataType, LongType):
+        # Driver-made file: INT64 TIMESTAMP(NANOS), read as long under
+        # the legacy flag. nanos -> micros -> naive-UTC timestamp,
+        # matching DuckDB. Integer DIV, not floor(a/b): double division
+        # loses ULPs at 1e18 ns and shifts timestamps by ±1 µs.
+        return df.withColumn(
+            "ts",
+            F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz"),
+        )
+    # Re-materialized copy (engine-written parquet): ts is already
+    # a micros timestamp; just normalize the zone flavor.
+    return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table; normalizes the events timestamp column."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        from pyspark.sql.types import LongType
-
-        key = (id(spark), "events-normalized", os.path.abspath(path), _path_stamp(path))
-        cached = _DF_CACHE.get(key)
-        if cached is not None:
-            return cached
-        apply_runtime_confs(spark)  # needs nanosAsLong on driver-made sessions
-        df = read_parquet(spark, path)
-        if isinstance(df.schema["ts"].dataType, LongType):
-            # Driver-made file: INT64 TIMESTAMP(NANOS), read as long under
-            # the legacy flag. nanos -> micros -> naive-UTC timestamp,
-            # matching DuckDB. Integer DIV, not floor(a/b): double division
-            # loses ULPs at 1e18 ns and shifts timestamps by ±1 µs.
-            out = df.withColumn(
-                "ts",
-                F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz"),
-            )
-        else:
-            # Re-materialized copy (engine-written parquet): ts is already
-            # a micros timestamp; just normalize the zone flavor.
-            out = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        _DF_CACHE[key] = out
-        return out
+        return _stamped(
+            plan_cache(spark),
+            ("events-normalized", path),
+            path,
+            lambda: _normalized_events(spark, path),
+        )
     return read_parquet(spark, path)
 
 
@@ -151,11 +161,7 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def ensure_parallelism(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    work_amplification: int = 1,
-) -> DataFrame:
+def ensure_parallelism(df: DataFrame, work_amplification: int = 1) -> DataFrame:
     """Round-robin repartition a small input so expression-heavy work
     pipelined onto a one-split scan can use the cluster — with the
     partition count following the input's estimated BYTES (guide §2.2),
@@ -170,8 +176,7 @@ def ensure_parallelism(
     the 32c>8c bench inversion). At real scale this whole guard is a
     NO-OP: an input estimated at >= parallelism x 128 MB already scans as
     at least that many splits, so no shuffle is added to production
-    plans. An explicit ``min_partitions`` keeps the old contract: exactly
-    that many partitions, no bytes logic.
+    plans, and neither is one added when Catalyst gives no estimate.
 
     ``work_amplification``: bytes are a poor work proxy for operators
     that EXPLODE their input before any shuffle (the SymSpell deletion
@@ -180,20 +185,10 @@ def ensure_parallelism(
     customer_entity_resolution 1.87 -> 2.21 s when its 167 KB input was
     sliced to 11 partitions by raw bytes; x20 restores full width).
     """
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    if min_partitions is not None:
-        if df.rdd.getNumPartitions() < min_partitions:
-            return df.repartition(min_partitions)
-        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
     size = _plan_size_bytes(df)
-    if size is None:
-        # Stats unavailable: fall back to the exact (slower) probe.
-        if df.rdd.getNumPartitions() < par:
-            return df.repartition(par)
-        return df
-    if size >= par * _SCAN_SPLIT_BYTES:
-        return df  # already at least `par` scan splits wide
+    if size is None or size >= par * _SCAN_SPLIT_BYTES:
+        return df  # no estimate, or already at least `par` scan splits wide
     target = min(par, -(-size * max(work_amplification, 1) // ENSURE_PAR_QUANTUM))
     if target <= 1:
         return df  # too small to be worth any shuffle

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import fast_pipeline as fp
+from ..session import plan_cache
 from ..sources.nt import parse_nt_lines
 from . import register
 
@@ -104,16 +105,13 @@ def _lines_df(spark, lines):
 
 
 # The fixture TRIPLES are static module constants, so their parsed frames
-# are immutable plans reusable across constructions (the catalog._DF_CACHE
+# are immutable plans reusable across constructions (the catalog plan-cache
 # argument; r10): rebuilding parallelize+createDataFrame+parse_nt_lines x4
-# was ~0.5 s of py4j traffic per fast_table_end_to_end build. Keyed by
-# session id — the engine holds sessions for the process lifetime.
-_TRIPLES_CACHE: dict = {}
-
-
+# was ~0.5 s of py4j traffic per fast_table_end_to_end build. Held in the
+# session's own ``plan_cache``, so they die with it.
 def _triples_by_type(spark):
-    key = id(spark)
-    cached = _TRIPLES_CACHE.get(key)
+    cache = plan_cache(spark)
+    cached = cache.get("fast-fixture-triples")
     if cached is None:
         cached = {
             "Topical": parse_nt_lines(_lines_df(spark, TOPICAL_LINES)),
@@ -121,7 +119,7 @@ def _triples_by_type(spark):
             "Event": parse_nt_lines(_lines_df(spark, EVENT_LINES)),
             "Personal": parse_nt_lines(_lines_df(spark, PERSONAL_LINES)),
         }
-        _TRIPLES_CACHE[key] = cached
+        cache["fast-fixture-triples"] = cached
     return cached
 
 

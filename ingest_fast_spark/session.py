@@ -77,6 +77,21 @@ RUNTIME_CONFS: dict[str, str] = {
 # set is flat-to-better (AQE merges the extra partitions away when small).
 INITIAL_PARTITION_FACTOR = 8
 
+# Entries in Spark's JVM-wide LRU cache of compiled whole-stage and
+# expression classes (``spark.sql.codegen.cache.maxEntries``, default 100).
+# A pass over one 5-query mix generates ~200 distinct classes, so at 100
+# every class is evicted before the next pass needs it and each warm pass
+# recompiles them all (199-201 compiles a pass, against 0-4 at 8,192;
+# pass wall ~9.2 -> ~7.6 s at 4 cores). One pass over all 313
+# registered queries at sf0.01 generates 4,101 distinct classes (5,781
+# compiles at 100 entries); holding them all raised off-heap metaspace
+# from 209 to 237 MB, ~7 KB an entry. 8,192 is about twice that working
+# set, so at most ~60 MB of metaspace when full.
+# A STATIC conf: Spark reads it once per JVM, when CodeGenerator is first
+# used, so only the builder below can set it — apply_runtime_confs cannot,
+# and a session built outside get_spark (an external driver's) keeps 100.
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 # Sessions already configured by apply_runtime_confs. The function is
 # called defensively from every events/stream loader and every run_ingest
@@ -85,6 +100,19 @@ INITIAL_PARTITION_FACTOR = 8
 # rather than by id(): a new session at a dead one's address must still
 # get the confs.
 _CONFIGURED_SESSIONS: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
+def plan_cache(spark: SparkSession) -> dict:
+    """This session's memo of immutable plan objects (DataFrames), created
+    on first use.
+
+    It lives on the session object, not in a module registry: every cached
+    DataFrame references its session, so a registry keyed by the session —
+    even a ``WeakKeyDictionary`` — would keep each session alive through its
+    own entries, and one keyed by ``id(spark)`` would hand a new session at
+    a dead one's address frames bound to the dead one. Here a session and
+    its frames are collected together."""
+    return vars(spark).setdefault("_ingest_fast_spark_plans", {})
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -143,6 +171,7 @@ def get_spark(
         # delay scheduling only adds stalls (coalesced/cached partitions
         # otherwise wait out spark.locality.wait per stage).
         .config("spark.locality.wait", "0ms")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

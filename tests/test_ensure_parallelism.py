@@ -15,6 +15,7 @@ from ingest_fast_spark.catalog import (
     load_table,
     read_parquet,
 )
+from ingest_fast_spark.session import plan_cache
 
 
 def _parts(df):
@@ -33,11 +34,6 @@ def test_small_input_partitions_follow_bytes(spark, sf_dir):
         assert got == _parts(d)
     else:
         assert got == expect
-
-
-def test_explicit_min_partitions_keeps_old_contract(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    assert _parts(ensure_parallelism(d, min_partitions=5)) == 5
 
 
 def test_work_amplification_widens(spark, sf_dir):
@@ -67,10 +63,13 @@ def test_df_cache_reuses_plan_and_invalidates_on_rewrite(spark, sf_dir, tmp_path
     load_table(spark, sf_dir, "documents").limit(3).write.mode("overwrite").parquet(dst)
     first = read_parquet(spark, dst)
     assert first is read_parquet(spark, dst)
+    sizes = (len(catalog._SCHEMA_CACHE), len(plan_cache(spark)))
     load_table(spark, sf_dir, "documents").limit(5).write.mode("overwrite").parquet(dst)
     second = read_parquet(spark, dst)
     assert second is not first
     assert second.count() == 5
+    # the rewrite replaced the path's stale entries instead of adding to them
+    assert (len(catalog._SCHEMA_CACHE), len(plan_cache(spark))) == sizes
 
 
 def test_events_cache_still_normalizes_ts(spark, sf_dir):
